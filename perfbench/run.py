@@ -5,10 +5,10 @@
 Run from the repository root. Each run generates its corpus from the seed
 (``gen.py``), starts one local Spark session with ``nproc`` cores, and then
 drives the real CLI in a closed loop with one client: one job, wait for it,
-the next. Set-up ends with the workload's warm-up jobs, the cold one first,
-so every timed job runs warm. Timed jobs run until ``--seconds`` have
-passed and at least ``min_jobs`` have run. Outputs are checked after the
-timed jobs (``workloads.py``).
+the next. Set-up ends with the workload's cold warm-up job. Timed jobs run
+until ``--seconds`` have passed and at least ``min_jobs`` have run, and at
+most ``max_jobs()``. Outputs are checked after the timed jobs
+(``workloads.py``).
 
 ``--trace 0`` reports the end-to-end metrics. ``--trace 1`` turns on
 Spark's event log and the spans of ``spans.py``, times the lazy layers one
@@ -40,15 +40,17 @@ PACKAGE = "clinicaltransformerrelationextraction_spark"
 WORK_ROOT = ".perfbench_work"
 DRIVER_MEM = "1g"  # bounds the JVM heap, and with it the RSS peak
 
-END_TO_END = ("setup_s", "job_s", "bytes_per_input_byte", "peak_rss_mb")
+END_TO_END = ("setup_s", "job_s", "bytes_per_input_byte", "peak_rss_mb",
+              "exec_memory_mb")
 UNITS = {"setup_s": "s", "job_s": "s", "bytes_per_input_byte": "ratio",
-         "peak_rss_mb": "MB"}
+         "peak_rss_mb": "MB", "exec_memory_mb": "MB"}
 
 # per-layer metrics of the traced run, by the package module they measure
 PER_LAYER = {
     "plans.ledger": ("ledger.bucket_s_p50", "ledger.bucket_s_max",
                      "ledger.jobs", "ledger.input_scans",
-                     "ledger.bytes_written", "ledger.self_s"),
+                     "ledger.bytes_written", "ledger.pipeline_s",
+                     "ledger.self_s"),
     "operators.candidates": ("candidates.busy_s", "candidates.pairs",
                              "candidates.cap_truncated_docs",
                              "candidates.pairs_per_doc_max"),
@@ -70,6 +72,7 @@ PER_LAYER = {
                               "incremental.merge_components_s",
                               "incremental.fixpoint_rounds"),
     "operators.graph": ("graph.components_s", "graph.rounds"),
+    "hot pages": ("hot.pair_share", "hot.kernel_time_share"),
     "session": ("session.start_s", "session.worker_warm_s",
                 "session.warmup_job_s"),
     "spark": ("spark.jobs", "spark.tasks", "spark.executor_run_s",
@@ -86,12 +89,22 @@ def layer_unit(name: str) -> str:
         return "s"
     if "bytes" in name:
         return "bytes"
-    if name.endswith(("ratio", "yield")):
+    if name.endswith(("ratio", "yield", "share")):
         return "ratio"
     return "count"
 
 
 # -- host context ------------------------------------------------------------
+
+def cpu_steal_s() -> float:
+    """CPU time the hypervisor gave to other guests since boot, summed over
+    this machine's CPUs (``steal`` in ``/proc/stat``); 0 where not
+    reported."""
+    with open("/proc/stat") as f:
+        fields = f.readline().split()
+    return int(fields[8]) / os.sysconf("SC_CLK_TCK") if len(fields) > 8 \
+        else 0.0
+
 
 def pyloop_seconds() -> float:
     """Single-thread pure-Python spin: bench.py's host-speed constant at a
@@ -106,14 +119,15 @@ def pyloop_seconds() -> float:
 
 
 class RssSampler:
-    """Samples, every ``period`` seconds, the RSS of this process's
-    descendants named ``java`` (the driver JVM) or ``python*`` (its Python
-    workers). ``peak`` is the peak of the JVM plus its ``workers`` largest
-    Python processes (a full wave of tasks); ``peak_all`` also counts the
-    idle surplus workers that Spark's worker pool keeps, whose number
-    varies from run to run. Other descendants are left out: a child the
-    JVM forks for a shell command carries a copy of the JVM's RSS until it
-    execs, which would count the JVM twice."""
+    """Samples, every ``period`` seconds, the RSS of this process (the
+    driver's Python side, where ``cli.main`` runs) and of its descendants
+    named ``java`` (the driver JVM) or ``python*`` (its Python workers).
+    ``peak`` is the peak of this process, the JVM and its ``workers``
+    largest Python workers (a full wave of tasks); ``peak_all`` also
+    counts the idle surplus workers that Spark's worker pool keeps, whose
+    number varies from run to run. Other descendants are left out: a child
+    the JVM forks for a shell command carries a copy of the JVM's RSS
+    until it execs, which would count the JVM twice."""
 
     def __init__(self, workers: int, period: float = 0.1) -> None:
         self.workers = workers
@@ -124,8 +138,9 @@ class RssSampler:
         self._thread = threading.Thread(target=self._loop, daemon=True)
         self._page = os.sysconf("SC_PAGE_SIZE")
 
-    def _descendants(self) -> list[tuple[str, int]]:
-        """(command name, rss bytes) of every descendant process."""
+    def _procs(self) -> list[tuple[str, int]]:
+        """(command name, rss bytes) of every descendant process, and
+        ``("driver", rss)`` of this one."""
         parent, procs = {}, {}
         for pid in os.listdir("/proc"):
             if not pid.isdigit():
@@ -147,20 +162,22 @@ class RssSampler:
                 p = parent.get(p)
             if p == me:
                 out.append(proc)
+        if me in procs:
+            out.append(("driver", procs[me][1]))
         return out
 
     def _loop(self) -> None:
         while not self._stop.is_set():
-            procs = self._descendants()
+            procs = self._procs()
             py = sorted((r for n, r in procs if n.startswith("python")),
                         reverse=True)
-            jvm = sum(r for n, r in procs if n == "java")
-            if jvm + sum(py[:self.workers]) > self.peak:
-                self.peak = jvm + sum(py[:self.workers])
+            base = sum(r for n, r in procs if n in ("java", "driver"))
+            if base + sum(py[:self.workers]) > self.peak:
+                self.peak = base + sum(py[:self.workers])
                 self.peak_procs = sorted(
                     ((n, round(r / 2**20)) for n, r in procs),
                     key=lambda p: -p[1])
-            self.peak_all = max(self.peak_all, jvm + sum(py))
+            self.peak_all = max(self.peak_all, base + sum(py))
             self._stop.wait(self.period)
 
     def __enter__(self):
@@ -170,6 +187,35 @@ class RssSampler:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join()
+
+
+class ExecMemory:
+    """Spark's own account of execution memory: the sort, aggregation and
+    join buffers its tasks take on the JVM heap. Read from the session's
+    live status store, which runs whether or not the UI does. ``job()``
+    returns, for the Spark stages run since the previous call, the sum of
+    each stage's peak execution memory (its tasks' peaks, summed)."""
+
+    def __init__(self, spark) -> None:
+        sc = spark.sparkContext
+        self._sc = sc._jsc.sc()
+        self._args = (None, False, False, sc._gateway.new_array(
+            sc._jvm.double, 0), sc._jvm.java.util.ArrayList())
+        self._last = -1
+        self.job()
+
+    def job(self) -> int:
+        self._sc.listenerBus().waitUntilEmpty()  # the stages' final metrics
+        stages = self._sc.statusStore().stageList(*self._args)
+        total, last = 0, self._last
+        for i in range(stages.size()):  # newest stage first
+            st = stages.apply(i)
+            if st.stageId() <= self._last:
+                break
+            last = max(last, st.stageId())
+            total += st.peakExecutionMemory()
+        self._last = last
+        return total
 
 
 # -- session -------------------------------------------------------------------
@@ -252,6 +298,7 @@ def run(args, work: str) -> dict:
 
     nproc = os.cpu_count() or 1
     host = {"nproc": nproc, "load_before": os.getloadavg()}
+    steal0 = cpu_steal_s()
     host["pyloop_5m_s"] = round(pyloop_seconds(), 3)
 
     t = time.perf_counter()
@@ -259,7 +306,7 @@ def run(args, work: str) -> dict:
     gen_s = time.perf_counter() - t
 
     tr = tracing.Tracer()
-    walls, outs, failures = [], [], []
+    walls, outs, failures, exec_mb = [], [], [], []
     with RssSampler(workers=nproc) as rss:
         t_setup = time.perf_counter()
         spark = start_session(work, nproc, args.trace)
@@ -281,6 +328,7 @@ def run(args, work: str) -> dict:
         setup_s = time.perf_counter() - t_setup
         if args.trace:
             install_spans(tr, spark)
+        exec_mem = ExecMemory(spark)
 
         t_loop = time.perf_counter()
         k = 0
@@ -294,6 +342,7 @@ def run(args, work: str) -> dict:
                     out = cli.main(wl.argv(k), spark=spark)
                 walls.append(time.perf_counter() - t)
                 outs.append(out)
+                exec_mb.append(exec_mem.job() / 2**20)
                 wl.after_job(k, out)
             except Exception as ex:  # a failed job is counted, not fatal
                 failures.append(f"job {k} raised {type(ex).__name__}: {ex}")
@@ -329,14 +378,18 @@ def run(args, work: str) -> dict:
         "job_s": statistics.median(ok) if ok else None,
         "bytes_per_input_byte": None if raised else out_ratio,
         "peak_rss_mb": rss.peak / 2**20,
+        "exec_memory_mb": statistics.median(exec_mb) if exec_mb else None,
     }
     host["load_after"] = os.getloadavg()
+    # CPU time taken by other guests during the run: a run that lost
+    # much of it to a busy host shows it here
+    host["cpu_steal_s"] = round(cpu_steal_s() - steal0, 2)
     record = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace,
         "host": host, "corpus": wl.props, "gen_s": round(gen_s, 3),
         "session_start_s": start_s, "worker_warm_s": warm_s,
         "warmup_job_s": warmup_s,
-        "jobs": n_jobs, "job_walls_s": walls,
+        "jobs": n_jobs, "job_walls_s": walls, "job_exec_memory_mb": exec_mb,
         "check_s": check_s, "peak_rss_all_mb": rss.peak_all / 2**20,
         "peak_rss_procs_mb": rss.peak_procs,
         # the paper's headline, for predict jobs: committed triples / job_s

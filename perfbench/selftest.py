@@ -5,7 +5,10 @@
 1. The generator is a pure function of (seed, workload): the same seed
    gives equal documents and byte-identical parquet files, and another
    seed gives other documents.
-2. The generator's copy of the gazetteer matches the engine's config.
+2. The generator's copy of the gazetteer matches the engine's config,
+   and a full-size ``predict`` corpus averages the measured candidate
+   pairs per document it is solved for (``gen.PAIRS_PER_DOC``, +-5% over
+   ten seeds).
 3. ``BENCHMARK.json`` names exactly the metrics ``run.py`` prints.
 4. A tiny run of every listed workload, untraced and traced, ends with a
    result line whose metric names match ``BENCHMARK.json``, with
@@ -59,6 +62,12 @@ def check_generator() -> list[str]:
     if (gen.ENT_VOCAB, gen.SENT_LEN, gen.CUTOFF) != (
             config.ENT_VOCAB, config.SENT_LEN, config.CUTOFF):
         errs.append("gen.py's gazetteer copy differs from config.py")
+    shape = workloads.SHAPES["predict_text"]
+    mean = sum(gen.corpus(s, "predict_text", shape)["props"]["base"][
+        "pairs_per_doc"] for s in range(1, 11)) / 10
+    if abs(mean / gen.PAIRS_PER_DOC - 1) > 0.05:
+        errs.append(f"predict corpus: {mean:.2f} pairs per doc, "
+                    f"{gen.PAIRS_PER_DOC:.2f} measured")
     return errs
 
 

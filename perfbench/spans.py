@@ -108,11 +108,9 @@ class Tracer:
             todo.extend(self.children(cur))
         return out
 
-    def self_time(self, s: Span, ignore: tuple[str, ...] = ()) -> float:
-        """Span duration minus the part its child spans cover (child spans
-        named in ``ignore`` count as the span's own time)."""
-        return s.dur - _covered([(c.start, c.end) for c in self.children(s)
-                                 if c.name not in ignore])
+    def self_time(self, s: Span) -> float:
+        """Span duration minus the part its child spans cover."""
+        return s.dur - _covered([(c.start, c.end) for c in self.children(s)])
 
     def innermost(self, t: float):
         """The innermost span open at wall time ``t`` (or None)."""
@@ -239,13 +237,18 @@ def _metric_types(info: dict, out: dict) -> None:
         _metric_types(c, out)
 
 
+def job_time(jobs: list[SparkJob], window: tuple[float, float]) -> float:
+    """Wall time inside ``window`` during which any of ``jobs`` ran."""
+    lo, hi = window
+    return _covered([(max(j.submit, lo), min(j.end, hi))
+                     for j in jobs if min(j.end, hi) > max(j.submit, lo)])
+
+
 def engine_totals(jobs: list[SparkJob], wall: float,
                   window: tuple[float, float]) -> dict:
     """The ``spark.*`` metrics of one benchmark job: sums over its Spark
     jobs, and ``driver_s`` — wall time not covered by any Spark job."""
-    lo, hi = window
-    covered = _covered([(max(j.submit, lo), min(j.end, hi))
-                        for j in jobs if j.end > j.submit])
+    covered = job_time(jobs, window)
     return {
         "spark.jobs": len(jobs),
         "spark.tasks": sum(j.tasks for j in jobs),

@@ -12,18 +12,25 @@ import dataclasses
 import json
 import os
 import statistics
+import time
 
 import gen
+import spans as tracing
+
+TIMED_DELTAS = 3  # timed ingest deltas per run, the same ones on every run
 
 # Corpus shapes, fixed per workload (the seed varies the documents only).
 # Sized so that one run, with its ~20 s of JVM start, worker warm-up and
 # warm-up jobs, stays near a minute on 4 cores: the per-job cost at these
-# sizes is mostly the engine's fixed per-Spark-job overhead.
+# sizes is mostly the engine's fixed per-Spark-job overhead. One predict
+# document in 400 is a hot-host page (see gen.py).
 SHAPES = {
-    "predict_stub": gen.Shape(base_docs=400, hot_share=0.005),
-    "predict_text": gen.Shape(base_docs=400, hot_share=0.005),
-    "ingest_deltas": gen.Shape(base_docs=200, deltas=5, delta_docs=100),
+    "predict_stub": gen.Shape(base_docs=400, hot_share=1 / 400),
+    "predict_text": gen.Shape(base_docs=400, hot_share=1 / 400),
+    "ingest_deltas": gen.Shape(base_docs=200, deltas=TIMED_DELTAS,
+                               delta_docs=100),
 }
+HOT_REPEATS = 3  # timings per corpus behind hot.kernel_time_share
 N_BUCKETS = 2  # ledger buckets of the predict jobs
 MAX_PREDICT_JOBS = 8
 
@@ -71,7 +78,7 @@ class Workload:
     per-layer figures."""
 
     name = ""
-    min_jobs = 5  # timed jobs per run, at least
+    min_jobs = 4  # timed jobs per run, at least
 
     def __init__(self, seed: int, work: str, small: bool = False) -> None:
         self.work = work
@@ -119,9 +126,7 @@ class Predict(Workload):
                 "--n-buckets", str(N_BUCKETS)]
 
     def warmup_argvs(self) -> list[list[str]]:
-        """The cold job and one more: the first timed job is then as warm
-        as the ones after it."""
-        return [self._argv("warmup0"), self._argv("warmup1")]
+        return [self._argv("warmup0")]
 
     def argv(self, k: int) -> list[str]:
         return self._argv(f"out{k}")
@@ -199,16 +204,21 @@ class Predict(Workload):
         )
         with open(f"{self.work}/out{k}/_ledger.json") as f:
             walls = [b["wall_sec"] for b in json.load(f).values()]
+        # the bucket pipelines run inside the ledger's parquet writes; the
+        # Spark jobs of those writes are the pipeline's time, the rest of
+        # the span (per-bucket scans and counts, re-reads, planning, the
+        # write commit, ledger and snapshot files) is the ledger's own
+        pipeline_s = sum(
+            tracing.job_time(ev.jobs_in(tr.subtree(w)), (w.start, w.end))
+            for w in sub if w.name == "write")
         return {
             "ledger.bucket_s_p50": statistics.median(walls),
             "ledger.bucket_s_max": max(walls),
             "ledger.jobs": len(jobs),
             "ledger.input_scans": scans,
             "ledger.bytes_written": sum(j.output_bytes for j in jobs),
-            # the ledger's own time: its span minus the layers it calls
-            # (its bucket writes are its own commit work, so they count)
-            "ledger.self_s": sum(tr.self_time(s, ignore=("write",))
-                                 for s in led),
+            "ledger.pipeline_s": pipeline_s,
+            "ledger.self_s": sum(s.dur for s in led) - pipeline_s,
         }
 
     def iso_layers(self, spark, tr, ev_jobs) -> dict:
@@ -241,6 +251,7 @@ class Predict(Workload):
         ).first()
         with tr.span("iso:score_filter_number") as s_score:
             _noop(S.score_filter_number(cand, cfg))
+        hot = self._hot_shares(docs, cand, n_pairs, cfg, emit)
         trip = S.score_filter_number(cand, cfg).localCheckpoint(eager=True)
         n_trip = trip.count()
         stub = self.cfg()
@@ -272,6 +283,40 @@ class Predict(Workload):
             "postprocess.brat_s": s_brat.dur,
             "postprocess.shuffle_bytes": lambda: sum(
                 j.shuffle_write for j in ev_jobs(s_brat)),
+            **hot,
+        }
+
+    def _hot_shares(self, docs, cand, n_pairs, cfg, emit) -> dict:
+        """The hot-host pages' share of the candidate pairs and of the
+        text kernels' time (``candidates`` plus ``score_filter_number``,
+        noop sinks): 1 - time without the hot pages / time with them, from
+        medians of ``HOT_REPEATS`` alternating timings."""
+        from pyspark.sql import functions as F
+
+        from clinicaltransformerrelationextraction_spark.operators import (
+            candidates as C,
+            scoring as S,
+        )
+
+        hot = self.corpus["hot_ids"]
+        if not hot:
+            return {"hot.pair_share": 0.0, "hot.kernel_time_share": 0.0}
+        is_hot = F.col("doc_id").isin(hot)
+        hot_pairs = cand.filter(is_hot).count()
+        cold = docs.filter(~is_hot).localCheckpoint(eager=True)
+        cold_cand = C.candidates(cold, cfg, emit=emit).localCheckpoint(
+            eager=True)
+        t_all, t_cold = [], []
+        for _ in range(HOT_REPEATS):
+            for d, c, acc in ((docs, cand, t_all), (cold, cold_cand, t_cold)):
+                t = time.perf_counter()
+                _noop(C.candidates(d, cfg, emit=emit))
+                _noop(S.score_filter_number(c, cfg))
+                acc.append(time.perf_counter() - t)
+        return {
+            "hot.pair_share": hot_pairs / max(n_pairs, 1),
+            "hot.kernel_time_share":
+                1 - statistics.median(t_cold) / statistics.median(t_all),
         }
 
 
@@ -309,13 +354,14 @@ class PredictStub(Predict):
 
 
 class Ingest(Workload):
-    """``cli ingest``: bootstrap an empty state dir from the base corpus,
-    then one delta per job. Set-up ends with the bootstrap and the first
-    delta (the first delta after a bootstrap runs colder than the rest);
-    timed job k ingests delta k + 1."""
+    """``cli ingest``: bootstrap an empty state dir from the base corpus
+    (the warm-up job that ends set-up), then one delta per job: timed job
+    k ingests delta k. Delta k runs against a history that grows with k,
+    so every run times the same ``TIMED_DELTAS`` deltas, however fast
+    they go: ``job_s`` then covers the same work on every commit."""
 
     name = "ingest_deltas"
-    min_jobs = 2
+    min_jobs = TIMED_DELTAS
     BYTES_AFTER = 2  # state bytes are measured after the 2nd timed delta
 
     def __init__(self, seed: int, work: str, small: bool = False) -> None:
@@ -340,13 +386,13 @@ class Ingest(Workload):
             gen.write_parquet(rows, self._src(k))
 
     def max_jobs(self) -> int:
-        return self.shape.deltas - 1
+        return TIMED_DELTAS
 
     def warmup_argvs(self) -> list[list[str]]:
-        return [self._ingest(-1), self._ingest(0)]
+        return [self._ingest(-1)]
 
     def argv(self, k: int) -> list[str]:
-        return self._ingest(k + 1)
+        return self._ingest(k)
 
     def _props(self, i: int) -> dict:
         return self.props["base"] if i < 0 else self.props["deltas"][i]
@@ -359,7 +405,7 @@ class Ingest(Workload):
         self._files[k], self._seen = n - self._seen, n
         if k + 1 == self.BYTES_AFTER:
             self._bytes = dir_bytes(self.state) / sum(
-                self._props(i)["text_bytes"] for i in range(-1, k + 2))
+                self._props(i)["text_bytes"] for i in range(-1, k + 1))
 
     def out_bytes_ratio(self) -> float:
         return self._bytes
@@ -380,7 +426,7 @@ class Ingest(Workload):
         )
 
         st = IngestState(self.state)
-        ingested = range(-1, n_jobs + 1)
+        ingested = range(-1, n_jobs)
         docs = spark.read.parquet(*[self._src(i) for i in ingested])
         fails = []
         n_docs = sum(self._props(i)["docs"] for i in ingested)
