@@ -28,7 +28,9 @@ import contextlib
 import json
 import os
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import threading
 import time
@@ -118,6 +120,36 @@ def pyloop_seconds() -> float:
     return time.perf_counter() - t0
 
 
+def descendants() -> list[tuple[int, str, int]]:
+    """(pid, command name, rss bytes) of this process's live descendants;
+    zombies, which have exited, are left out."""
+    page = os.sysconf("SC_PAGE_SIZE")
+    parent, procs = {}, {}
+    for pid in os.listdir("/proc"):
+        if not pid.isdigit():
+            continue
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                stat = f.read()
+            with open(f"/proc/{pid}/statm") as f:
+                pages = int(f.read().split()[1])
+        except (OSError, ValueError, IndexError):
+            continue  # the process exited while being read
+        name, rest = stat.split("(", 1)[1].rsplit(")", 1)
+        state, ppid = rest.split()[:2]
+        parent[int(pid)] = int(ppid)
+        if state != "Z":
+            procs[int(pid)] = (name, pages * page)
+    me, out = os.getpid(), []
+    for pid, (name, rss) in procs.items():
+        p = parent.get(pid)
+        while p and p != me:
+            p = parent.get(p)
+        if p == me:
+            out.append((pid, name, rss))
+    return out
+
+
 class RssSampler:
     """Samples, every ``period`` seconds, the RSS of this process (the
     driver's Python side, where ``cli.main`` runs) and of its descendants
@@ -141,30 +173,9 @@ class RssSampler:
     def _procs(self) -> list[tuple[str, int]]:
         """(command name, rss bytes) of every descendant process, and
         ``("driver", rss)`` of this one."""
-        parent, procs = {}, {}
-        for pid in os.listdir("/proc"):
-            if not pid.isdigit():
-                continue
-            try:
-                with open(f"/proc/{pid}/stat") as f:
-                    stat = f.read()
-                with open(f"/proc/{pid}/statm") as f:
-                    pages = int(f.read().split()[1])
-            except (OSError, ValueError, IndexError):
-                continue  # the process exited while being read
-            name, rest = stat.split("(", 1)[1].rsplit(")", 1)
-            parent[int(pid)] = int(rest.split()[1])
-            procs[int(pid)] = (name, pages * self._page)
-        me, out = os.getpid(), []
-        for pid, proc in procs.items():
-            p = parent.get(pid)
-            while p and p != me:
-                p = parent.get(p)
-            if p == me:
-                out.append(proc)
-        if me in procs:
-            out.append(("driver", procs[me][1]))
-        return out
+        with open("/proc/self/statm") as f:
+            me = int(f.read().split()[1]) * self._page
+        return [(n, r) for _, n, r in descendants()] + [("driver", me)]
 
     def _loop(self) -> None:
         while not self._stop.is_set():
@@ -216,6 +227,73 @@ class ExecMemory:
             total += st.peakExecutionMemory()
         self._last = last
         return total
+
+
+# -- processes ---------------------------------------------------------------
+
+def become_subreaper() -> None:
+    """Make this process the reaper of its orphaned descendants (Linux
+    ``PR_SET_CHILD_SUBREAPER``): a Python worker whose parent has exited is
+    then still a descendant, so ``stop_processes`` can wait for it."""
+    import ctypes
+
+    pr_set_child_subreaper = 36  # from <linux/prctl.h>
+    try:
+        ctypes.CDLL(None, use_errno=True).prctl(pr_set_child_subreaper, 1,
+                                                0, 0, 0)
+    except (OSError, AttributeError):
+        pass  # not Linux: waiting for the JVM itself still holds
+
+
+def reap() -> None:
+    """Collect the exit status of every child that has ended."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def stop_processes(timeout: float = 60.0) -> None:
+    """Stop the Spark session, the JVM that pyspark launched for it and
+    every process the JVM started (the Python worker daemon and its
+    workers), and wait until each has exited. Left alone, the JVM would
+    leave only after this process does, when it sees its stdin close."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return
+    if SparkContext._active_spark_context is not None:
+        SparkContext._active_spark_context.stop()
+    with contextlib.suppress(Exception):
+        gateway.close()
+    proc = getattr(gateway, "proc", None)
+    if proc is not None:
+        if proc.stdin:
+            proc.stdin.close()  # the gateway server exits on EOF
+        try:
+            proc.wait(timeout)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    SparkContext._gateway = SparkContext._jvm = None
+    deadline, killed = time.monotonic() + timeout, False
+    while True:
+        reap()
+        left = [pid for pid, _, _ in descendants()]
+        if not left:
+            return
+        if time.monotonic() > deadline:
+            if killed:
+                raise RuntimeError(f"processes {left} outlived SIGKILL")
+            for pid in left:
+                with contextlib.suppress(OSError):
+                    os.kill(pid, signal.SIGKILL)
+            deadline, killed = time.monotonic() + 10, True
+        time.sleep(0.05)
 
 
 # -- session -------------------------------------------------------------------
@@ -465,10 +543,13 @@ def main(argv=None) -> int:
         return 2
     work = os.path.abspath(
         f"{WORK_ROOT}/{args.workload}-s{args.seed}-p{os.getpid()}")
+    become_subreaper()
+    # a run stopped by SIGTERM still stops its processes on the way out
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     try:
         res = run(args, work)
     finally:
-        # the Spark JVM exits with this process (its gateway watches stdin)
+        stop_processes()
         shutil.rmtree(work, ignore_errors=True)
     rec = res["record"]
     last = f"{WORK_ROOT}/last-untraced-{args.workload}.json"
