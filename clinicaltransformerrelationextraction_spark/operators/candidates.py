@@ -12,21 +12,26 @@ Implements, Spark-first and shuffle-free, the reference semantics of:
 - [s1]/[e1], [s2]/[e2] marker insertion with cross-sentence concatenation —
   reference: ``format_relen`` (preprocessing.ipynb cell 6)
 
-Design for 100 TB: every step below is a narrow, per-row transformation built
-from Catalyst higher-order functions (``transform``/``filter``/``flatten``) —
-the quadratic pair blow-up happens *inside one row* and is capped by
-``max_pairs_per_doc``, so candidate generation causes **zero shuffle** and no
-doc-level skew can stall a stage. Compare with the naive relational
-formulation (mentions self-join on doc key), which shuffles the full mention
-table twice and is quadratic *across* the shuffle.
+Design for 100 TB: the quadratic pair blow-up happens *inside one document*,
+capped by ``max_pairs_per_doc``, so candidate generation causes **zero
+shuffle** and no doc-level skew can stall a stage. One Python enumeration
+core (``doc_index`` → ``enumerate_doc`` → ``candidate_rows``) runs in the
+Arrow kernels: the fused flagship (``scoring.enum_score_filter_number``),
+``candidates_lengths_kernel`` and ``candidate_cap_stats``. The Catalyst
+HOF form ``candidates_indexed`` builds the text candidate frame (streams,
+salted runs, featurize, binary mode) and is the kernels' oracle. The naive
+relational formulation (mentions self-join on doc key) shuffles the full
+mention table twice and is quadratic *across* the shuffle.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN, PipelineConfig
 from ..functions.util import ensure_parallelism
 
 __all__ = [
@@ -87,48 +92,12 @@ def mentions_col(cfg: PipelineConfig, toks: Column) -> Column:
     )
 
 
-def pairs_col_indexed(cfg: PipelineConfig, mentions: Column,
-                      n_sent: Column) -> Column:
-    """Output-linear in-row pair generation: bucket arg2 (Drug) mentions by
-    sentence window FIRST, then enumerate each arg1 mention only against
-    the drugs actually inside its window. Work per doc is
-    O(n_sent·n_drugs + n_pairs) instead of the naive O(M²) cross product —
-    the in-row analog of an index nested-loop join. Same kept-pair order as
-    ``pairs_col`` ((i1 asc, i2 asc)), verified byte-identical in tests."""
-    arg1_types = [t1 for t1, _ in cfg.valid_combs]
-    arg2_types = sorted({t2 for _, t2 in cfg.valid_combs})
-    m1s = F.filter(mentions, lambda m: m["ent_type"].isin(*arg1_types))
-    m2s = F.filter(mentions, lambda m: m["ent_type"].isin(*arg2_types))
-    # drugs_by_win[s+1] = arg2 mentions within cutoff of sentence s
-    drugs_by_win = F.transform(
-        F.sequence(F.lit(0), F.greatest(n_sent - 1, F.lit(0)).cast("int")),
-        lambda s: F.filter(
-            m2s, lambda d: F.abs(d["sent_id"] - s) <= cfg.cutoff
-        ),
-    )
-    crossed = F.flatten(
-        F.transform(
-            m1s,
-            lambda m1: F.transform(
-                F.element_at(drugs_by_win, m1["sent_id"] + 1),
-                lambda m2: F.struct(m1.alias("a"), m2.alias("b")),
-            ),
-        )
-    )
-    cmap = comb_map_col(cfg)
-    return F.filter(
-        crossed,
-        lambda p: (p["a"]["i"] != p["b"]["i"])
-        & F.array_contains(cmap[p["a"]["ent_type"]], p["b"]["ent_type"]),
-    )
-
-
 def pairs_col(cfg: PipelineConfig, mentions: Column) -> Column:
     """Ordered candidate pairs (m1=arg1 non-Drug, m2=arg2 Drug) within the
     sentence-distance cutoff. In-row cross product + predicate pushup; the
     reference's F3 (valid combos), F4 (distance) and J1 (permutations).
-    Superseded by ``pairs_col_indexed`` (output-linear); kept as the naive
-    reference form for the equality tests."""
+    Superseded by the indexed enumeration (output-linear); kept as the
+    naive reference form for the equality tests."""
     cmap = comb_map_col(cfg)
 
     def pair_filter(p: Column) -> Column:
@@ -174,25 +143,40 @@ def candidate_cap_stats(
 ) -> DataFrame:
     """No silent truncation (SURVEY.md §7.4.4): one row of corpus-level cap
     accounting — docs over the per-doc pair cap and total pairs dropped.
-    Cheap (counts only, no strings built); run it alongside any capped
-    pipeline and persist the row with the run's lineage."""
+    Counts only: a per-doc Arrow kernel counts each doc's UNCAPPED pairs
+    from the window buckets (``count_doc_pairs``) without building a
+    single pair, so a hot-host page costs its mention scan, not its
+    quadratic pair array. Run it alongside any capped pipeline and
+    persist the row with the run's lineage."""
+    import pandas as pd
+
     cfg = cfg or PipelineConfig()
-    toks = tokens_col(F.col(text_col))
-    base = df.select(F.col(doc_col).alias("doc_id"), toks.alias("toks"))
-    n_pairs = F.size(pairs_col(cfg, mentions_col(cfg, F.col("toks"))))
-    cap = cfg.max_pairs_per_doc or 0
-    per_doc = base.select(
-        "doc_id",
-        n_pairs.alias("n_pairs"),
-        F.greatest(n_pairs - cap, F.lit(0)).alias("n_dropped"),
+    spec = enum_spec(cfg)
+
+    def kernel(batches):
+        for pdf in batches:
+            yield pd.DataFrame({
+                "n_pairs": pd.array(
+                    [None if tx is None
+                     else count_doc_pairs(tx.split(" "), spec)
+                     for tx in pdf["text"]],
+                    dtype="Int64",
+                )
+            })
+
+    per_doc = df.select(F.col(text_col).alias("text")).mapInPandas(
+        kernel, schema="n_pairs long"
+    )
+    n_pairs = F.col("n_pairs")
+    # max_pairs_per_doc of 0/None means uncapped: nothing is dropped
+    n_dropped = (
+        F.greatest(n_pairs - spec.cap, F.lit(0)) if spec.cap else F.lit(0)
     )
     return per_doc.agg(
         F.count("*").alias("n_docs"),
-        F.sum("n_pairs").alias("n_pairs_total"),
-        F.sum(F.when(F.col("n_dropped") > 0, 1).otherwise(0)).alias(
-            "n_docs_capped"
-        ),
-        F.sum("n_dropped").alias("n_pairs_dropped"),
+        F.sum(n_pairs).alias("n_pairs_total"),
+        F.sum(F.when(n_dropped > 0, 1).otherwise(0)).alias("n_docs_capped"),
+        F.sum(n_dropped).alias("n_pairs_dropped"),
     )
 
 
@@ -257,8 +241,6 @@ def candidates_relational(
             "wen"
         ),
     )
-    from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN
-
     win_toks = pairs.join(
         tok_rows.select("doc_id", "i", "tok"), "doc_id"
     ).filter(F.col("i").between(F.col("wst"), F.col("wen")))
@@ -339,8 +321,6 @@ def candidates_inrow(
     wst = (lo * cfg.sent_len + 1).cast("int")
     wen = F.least(F.size("toks"), ((hi + 1) * cfg.sent_len).cast("int"))
     wlen = wen - wst + 1
-
-    from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN
 
     return rows.select(
         "doc_id",
@@ -466,8 +446,6 @@ def candidates_indexed(
     wen = F.least(F.size("toks"), ((hi + 1) * cfg.sent_len).cast("int"))
     wlen = wen - wst + 1
 
-    from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN
-
     if emit == "lengths":
         # lengths-only scorer input (scoring backends with
         # needs == "lengths"): ONE O(window) aggregate replaces TWO
@@ -584,8 +562,6 @@ def candidates_join(
     wen = F.least(F.size("toks"), ((hi + 1) * cfg.sent_len).cast("int"))
     wlen = wen - wst + 1
 
-    from ..config import S1_CLOSE, S1_OPEN, S2_CLOSE, S2_OPEN
-
     return joined.select(
         "doc_id",
         F.concat(F.lit("T"), F.col("i1")).alias("ent_id_1"),
@@ -602,101 +578,173 @@ def candidates_join(
     )
 
 
+class EnumSpec(NamedTuple):
+    """The per-run constants of the enumeration core, built once on the
+    driver (``enum_spec``) and captured by value in the kernels."""
+
+    vocab: dict  # token -> entity type
+    arg1: frozenset  # types that open a pair
+    arg2: frozenset  # types a pair can close on
+    allowed: dict  # arg1 type -> frozenset of arg2 types (exact combos)
+    sent_len: int
+    cutoff: int
+    cap: int  # max pairs per doc; 0 = uncapped
+
+
+def enum_spec(cfg: PipelineConfig) -> EnumSpec:
+    allowed: dict[str, set] = {}
+    for t1, t2 in cfg.valid_combs:
+        allowed.setdefault(t1, set()).add(t2)
+    return EnumSpec(
+        vocab=dict(cfg.ent_vocab),
+        arg1=frozenset(allowed),
+        arg2=frozenset(t2 for _, t2 in cfg.valid_combs),
+        allowed={t1: frozenset(v) for t1, v in allowed.items()},
+        sent_len=cfg.sent_len,
+        cutoff=cfg.cutoff,
+        cap=cfg.max_pairs_per_doc or 0,
+    )
+
+
+def doc_index(toks: list[str], spec: EnumSpec):
+    """Mention scan + per-window arg2 buckets of one tokenized doc:
+    ``(m1s, dbw)`` with the arg1 mentions ``(i, type, sent_id)`` in token
+    order (1-based ``i``) and ``dbw[s]`` the arg2 mentions within
+    ``cutoff`` sentences of sentence ``s``, in token order. None when the
+    doc has no arg1 or no arg2 mention."""
+    sl = spec.sent_len
+    vocab = spec.vocab
+    men = [(i + 1, vocab[t], i // sl) for i, t in enumerate(toks) if t in vocab]
+    m1s = [m for m in men if m[1] in spec.arg1]
+    m2s = [m for m in men if m[1] in spec.arg2]
+    if not m1s or not m2s:
+        return None
+    cutoff = spec.cutoff
+    dbw = [
+        [d for d in m2s if abs(d[2] - s) <= cutoff]
+        for s in range(max((len(toks) + sl - 1) // sl, 1))
+    ]
+    return m1s, dbw
+
+
+def enumerate_doc(toks: list[str], spec: EnumSpec):
+    """The enumeration core: yields one doc's candidate pairs
+    ``(i1, t1, s1, i2, t2, s2)`` in the indexed form's order — arg1
+    mentions in token order, each against its window's arg2 mentions in
+    token order — keeping the first ``spec.cap``. The same kept-set as
+    ``candidates_indexed``'s in-row slice (pinned in tests)."""
+    idx = doc_index(toks, spec)
+    if idx is None:
+        return
+    m1s, dbw = idx
+    cap = spec.cap
+    n = 0
+    for i1, t1, s1 in m1s:
+        al = spec.allowed[t1]
+        for i2, t2, s2 in dbw[s1]:
+            if i1 != i2 and t2 in al:
+                yield i1, t1, s1, i2, t2, s2
+                n += 1
+                if n == cap:
+                    return
+
+
+def count_doc_pairs(toks: list[str], spec: EnumSpec) -> int:
+    """One doc's UNCAPPED pair count, from the window buckets without
+    enumerating: an arg1 mention pairs with every allowed-type mention of
+    its window bucket except itself (it sits in its own bucket iff its
+    type is allowed as its own partner)."""
+    idx = doc_index(toks, spec)
+    if idx is None:
+        return 0
+    m1s, dbw = idx
+    n = 0
+    for _, t1, s1 in m1s:
+        al = spec.allowed[t1]
+        n += sum(1 for d in dbw[s1] if d[1] in al) - (t1 in al)
+    return n
+
+
+CANDIDATE_COLS = {
+    emit: [
+        "doc_id", "ent_id_1", "ent_id_2", "ent_type_1", "ent_type_2",
+        *pair, "sent_diff", "i1", "i2",
+    ]
+    for emit, pair in (
+        ("text", ("s1_marked", "s2_marked")),
+        ("lengths", ("s1_len", "s2_len")),
+    )
+}
+
+
+def candidate_rows(doc_ids, texts, spec: EnumSpec, emit: str = "text"):
+    """Candidate rows (``CANDIDATE_COLS[emit]`` order) of a batch of
+    documents, on ``enumerate_doc``. A pair's window (sentences lo..hi,
+    ``toks[lo*sl : min(ntok, (hi+1)*sl)]`` " "-joined) is a slice of the
+    text, located by a prefix sum of token offsets. ``emit="text"`` marks
+    the entity token in it ("[s1] tok [e1]" / "[s2] tok [e2]", the
+    ``_marked`` semantics); ``emit="lengths"`` gives its length plus the
+    10 marker chars (``_win_len``). NULL texts yield nothing."""
+    sl = spec.sent_len
+    text = emit == "text"
+    for did, tx in zip(doc_ids, texts):
+        if tx is None:
+            continue
+        toks = tx.split(" ")
+        ntok = len(toks)
+        pos = None
+        for i1, t1, s1, i2, t2, s2 in enumerate_doc(toks, spec):
+            if pos is None:
+                # pos[k] = offset of token k in tx; pos[ntok] = len(tx)+1
+                pos = [0] * (ntok + 1)
+                for k, t in enumerate(toks):
+                    pos[k + 1] = pos[k] + len(t) + 1
+            lo, hi = (s1, s2) if s1 <= s2 else (s2, s1)
+            a = pos[lo * sl]
+            z = pos[min(ntok, (hi + 1) * sl)] - 1
+            if text:
+                b1, e1 = pos[i1 - 1], pos[i1] - 1
+                b2, e2 = pos[i2 - 1], pos[i2] - 1
+                m1 = f"{tx[a:b1]}{S1_OPEN} {tx[b1:e1]} {S1_CLOSE}{tx[e1:z]}"
+                m2 = f"{tx[a:b2]}{S2_OPEN} {tx[b2:e2]} {S2_CLOSE}{tx[e2:z]}"
+            else:
+                m1 = m2 = z - a + 10
+            yield (did, f"T{i1}", f"T{i2}", t1, t2, m1, m2, abs(s1 - s2),
+                   i1, i2)
+
+
 def candidates_lengths_kernel(
     df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Arrow-batched kernel twin of
     ``candidates_indexed(emit="lengths")`` — byte-identical rows (pinned
-    in tests/test_round7_perf.py), built by a plain Python loop per doc
-    instead of the interpreted Catalyst HOF enumeration (r7, guide §4.2;
-    same ~100× per-element gap the dedup kernels measured). Mirrors the
-    indexed enumeration EXACTLY, including the kept-set of the per-doc
-    cap (m1s in token order × the window's drugs in token order,
-    filtered, first ``max_pairs_per_doc``); window lengths come from a
-    per-doc prefix-sum of token character lengths (O(1) per pair). Used
-    only for lengths-only scoring backends (the stub); the text mode
-    keeps the JVM path, whose marked-string columns Catalyst can prune
-    under count()-style consumers."""
+    in tests/test_round7_perf.py), built by ``candidate_rows`` per doc
+    instead of the interpreted Catalyst HOF enumeration (same ~100×
+    per-element gap the dedup kernels measured). Serves ``candidates``'s
+    batch lengths mode; the fused flagship kernel
+    (``scoring.enum_score_filter_number``) runs the same enumeration for
+    both emits without an intermediate candidate frame."""
     import pandas as pd
 
     cfg = cfg or PipelineConfig()
     # factor=1: one wave of core-count tasks — the per-task Python
-    # boundary overhead argument from the dedup kernels (r7)
+    # boundary overhead argument from the dedup kernels
     src = ensure_parallelism(
-        df.select(F.col(doc_col).alias("doc_id"), F.col(text_col)), factor=1
+        df.select(F.col(doc_col).alias("doc_id"), F.col(text_col).alias("text")),
+        factor=1,
     )
     id_type = src.schema["doc_id"].dataType.simpleString()
-    vocab = dict(cfg.ent_vocab)
-    arg1_types = set(t1 for t1, _ in cfg.valid_combs)
-    arg2_types = set(t2 for _, t2 in cfg.valid_combs)
-    allowed: dict[str, set] = {}
-    for t1, t2 in cfg.valid_combs:
-        allowed.setdefault(t1, set()).add(t2)
-    sl = cfg.sent_len
-    cutoff = cfg.cutoff
-    cap = cfg.max_pairs_per_doc or 0
+    spec = enum_spec(cfg)
+    cols = CANDIDATE_COLS["lengths"]
 
     def kernel(batches):
         for pdf in batches:
-            rows: list = []
-            for did, tx in zip(pdf["doc_id"], pdf[text_col]):
-                if tx is None:
-                    continue
-                toks = tx.split(" ")
-                ntok = len(toks)
-                men = [
-                    (i + 1, vocab[t], (i // sl))
-                    for i, t in enumerate(toks)
-                    if t in vocab
-                ]
-                m1s = [m for m in men if m[1] in arg1_types]
-                if not m1s:
-                    continue
-                m2s = [m for m in men if m[1] in arg2_types]
-                if not m2s:
-                    continue
-                n_sent = max((ntok + sl - 1) // sl, 1)
-                dbw = [
-                    [d for d in m2s if abs(d[2] - s) <= cutoff]
-                    for s in range(n_sent)
-                ]
-                pairs = []
-                done = False
-                for i1, t1, s1 in m1s:
-                    al = allowed.get(t1)
-                    for i2, t2, s2 in dbw[s1]:
-                        if i1 != i2 and al is not None and t2 in al:
-                            pairs.append((i1, t1, s1, i2, t2, s2))
-                            if cap and len(pairs) >= cap:
-                                done = True
-                                break
-                    if done:
-                        break
-                if not pairs:
-                    continue
-                pre = [0] * (ntok + 1)
-                for k, t in enumerate(toks):
-                    pre[k + 1] = pre[k] + len(t)
-                for i1, t1, s1, i2, t2, s2 in pairs:
-                    lo, hi = (s1, s2) if s1 <= s2 else (s2, s1)
-                    wst = lo * sl + 1
-                    wen = min(ntok, (hi + 1) * sl)
-                    # chars of the space-joined window + 10 marker chars
-                    wl = pre[wen] - pre[wst - 1] + (wen - wst) + 10
-                    rows.append(
-                        (did, f"T{i1}", f"T{i2}", t1, t2, wl, wl,
-                         abs(s1 - s2), i1, i2)
-                    )
+            rows = list(
+                candidate_rows(pdf["doc_id"], pdf["text"], spec, "lengths")
+            )
             if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id", "ent_id_1", "ent_id_2", "ent_type_1",
-                        "ent_type_2", "s1_len", "s2_len", "sent_diff",
-                        "i1", "i2",
-                    ],
-                )
+                yield pd.DataFrame(rows, columns=cols)
 
     return src.mapInPandas(
         kernel,
@@ -712,20 +760,21 @@ def candidates(
     df: DataFrame, cfg: PipelineConfig | None = None, doc_col: str = "doc_id",
     text_col: str = "text", emit: str = "text",
 ) -> DataFrame:
-    """Product path. Four formulations were built and measured (BENCH.md):
-    naive in-row cross product, relational self-join + groupBy, hybrid
-    join + in-row markers, and the indexed in-row form — the indexed form
-    wins on every corpus shape AND is the only zero-shuffle one, so it is
-    the default. The others remain importable for regression benchmarks.
+    """The candidate frame. Four formulations were built and measured
+    (BENCH.md): naive in-row cross product, relational self-join +
+    groupBy, hybrid join + in-row markers, and the indexed in-row form —
+    the indexed form wins on every corpus shape AND is the only
+    zero-shuffle one, so it builds the text frame. The others remain
+    importable for regression benchmarks.
 
-    ``emit="lengths"`` (r7) swaps the two marked-string columns for the
+    ``emit="lengths"`` swaps the two marked-string columns for the
     single arithmetically-derived window length (s1_len/s2_len) — the
     input projection for scoring backends that declare
     ``needs = "lengths"`` (see scoring._resolve_factory). Batch
     lengths-mode runs the Arrow-batched enumeration kernel
     (``candidates_lengths_kernel``, pinned byte-identical to the indexed
-    HOF form); streams keep the HOF form (stream-compatible, and
-    micro-batches are small)."""
+    HOF form); streams keep the HOF form. The flagship pipeline does not
+    build this frame at all (``scoring.enum_score_filter_number``)."""
     if emit == "lengths" and not df.isStreaming:
         return candidates_lengths_kernel(
             df, cfg, doc_col=doc_col, text_col=text_col

@@ -16,8 +16,8 @@ Two scorer backends behind one interface:
   (schema, batching, executor-local model cache) is identical for both.
 
 At 100 TB: scoring is the dominant cost; it is embarrassingly parallel
-(narrow map), so throughput scales with executor count. Batch size couples to
-``spark.sql.execution.arrow.maxRecordsPerBatch``.
+(narrow map), so throughput scales with executor count. Each scorer call sees
+at most ``PipelineConfig.batch_size`` rows.
 """
 
 from __future__ import annotations
@@ -349,6 +349,8 @@ def _resolve_factory(cfg: PipelineConfig) -> Callable:
     workers — serialize by value with the closure. A factory's optional
     ``validate(cfg)`` hook runs here so config errors abort at plan time
     on the driver, not as 4x-retried executor task failures."""
+    if cfg.batch_size < 1:
+        raise ValueError(f"batch_size must be >= 1, got {cfg.batch_size}")
     try:
         factory = SCORER_REGISTRY[cfg.scorer]
     except KeyError:
@@ -365,28 +367,40 @@ def _resolve_factory(cfg: PipelineConfig) -> Callable:
 SCORER_INPUT_COLS = ("s1_marked", "s2_marked", "s1_len", "s2_len")
 
 
+def _needs(factory: Callable) -> str:
+    """The candidate emit a backend consumes: "lengths" or "text"."""
+    needs = getattr(factory, "needs", "text")
+    return "lengths" if needs == "lengths" else "text"
+
+
 def scoring_emit(cfg: PipelineConfig) -> str:
-    """The candidate-frame ``emit`` mode the configured backend wants:
-    "lengths" for backends declaring ``needs = "lengths"`` (the stub),
-    "text" otherwise — callers building candidates expressly for scoring
-    (q_predictions, the fused pipeline) use this so the marked strings are
-    never even constructed for a lengths-only backend."""
-    return (
-        "lengths"
-        if getattr(_resolve_factory(cfg), "needs", "text") == "lengths"
-        else "text"
-    )
+    """The candidate-frame ``emit`` mode the configured backend wants —
+    callers building candidates expressly for scoring (q_predictions, the
+    fused pipeline) use this so the marked strings are never even
+    constructed for a lengths-only backend."""
+    return _needs(_resolve_factory(cfg))
 
 
-def _scorer_input(cand: DataFrame, factory: Callable) -> DataFrame:
+def _scorer_input(cand: DataFrame, factory: Callable,
+                  keep_text: bool = False) -> DataFrame:
     """Project the candidate frame down to the backend's declared input
     (guide §4.1: pass only the columns the function needs across the
-    Python boundary). Text backends get the frame unchanged; lengths-only
-    backends get (s1_len, s2_len) ints — reused as-is when the frame was
-    built with candidates(emit="lengths"), else derived via F.length so
-    only two ints per row cross the Arrow boundary instead of two marked
-    strings."""
-    if getattr(factory, "needs", "text") != "lengths":
+    Python boundary). Text backends (and ``keep_text``) get the frame
+    unchanged and require its marked strings — a lengths-only frame
+    fails HERE, on the driver, not as a KeyError inside a worker.
+    Lengths-only backends get (s1_len, s2_len) ints — reused as-is when
+    the frame was built with candidates(emit="lengths"), else derived via
+    F.length so only two ints per row cross the Arrow boundary instead of
+    two marked strings."""
+    if keep_text or _needs(factory) == "text":
+        if "s1_marked" not in cand.columns or "s2_marked" not in cand.columns:
+            raise ValueError(
+                "the candidate frame has no s1_marked/s2_marked columns "
+                "(built with candidates(emit=\"lengths\")?), but "
+                + ("keep_text=True retains them" if keep_text else
+                   "the scoring backend consumes text")
+                + "; build it with candidates(docs, cfg) (emit=\"text\")"
+            )
         return cand
     if "s1_len" in cand.columns:
         return cand
@@ -398,26 +412,44 @@ def _scorer_input(cand: DataFrame, factory: Callable) -> DataFrame:
     )
 
 
+def _score_batched(scorer: Callable, pdf: pd.DataFrame,
+                   rows: int) -> tuple[np.ndarray, np.ndarray]:
+    """``scorer(pdf)`` in row slices of at most ``rows``
+    (``PipelineConfig.batch_size``), so a backend's per-call working set —
+    e.g. mlp's dense feature matrix — is bounded however many candidate
+    rows one Arrow batch of documents yields."""
+    if len(pdf) <= rows:
+        return scorer(pdf)
+    parts = [
+        scorer(pdf.iloc[k:k + rows].reset_index(drop=True))
+        for k in range(0, len(pdf), rows)
+    ]
+    return (np.concatenate([p[0] for p in parts]),
+            np.concatenate([p[1] for p in parts]))
+
+
 def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
                      keep_text: bool = False) -> DataFrame:
     """candidates -> candidates + (pred_label, label_idx, score).
 
-    One ``mapInPandas`` pass; scorer constructed once per partition-task.
-    Alignment with the input rows is by content key (doc_id, i1, i2) carried
+    One ``mapInPandas`` pass; scorer constructed once per partition-task
+    and called on at most ``cfg.batch_size`` rows at a time. Alignment
+    with the input rows is by content key (doc_id, i1, i2) carried
     through the UDF — never positional (SURVEY.md §2.3 J3 trap).
 
     The marked sentence strings are the scorer's INPUT only; by default they
     are dropped from the output (they dominate the Arrow return traffic and
-    nothing downstream reads them — pass ``keep_text=True`` to retain).
-    Backends declaring ``needs = "lengths"`` receive precomputed window
-    lengths instead of the strings (see _scorer_input) unless
-    ``keep_text`` forces the text through."""
+    nothing downstream reads them — pass ``keep_text=True`` to retain;
+    it requires a text candidate frame). Backends declaring
+    ``needs = "lengths"`` receive precomputed window lengths instead of
+    the strings (see _scorer_input) unless ``keep_text`` forces the text
+    through."""
     cfg = cfg or PipelineConfig()
     labels = list(cfg.labels)
     label_arr = np.asarray(labels, dtype=object)
     factory = _resolve_factory(cfg)
-    if not keep_text:
-        cand = _scorer_input(cand, factory)
+    rows = cfg.batch_size
+    cand = _scorer_input(cand, factory, keep_text)
     drop_cols = (
         []
         if keep_text
@@ -437,7 +469,7 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            idx, score = scorer(pdf)
+            idx, score = _score_batched(scorer, pdf, rows)
             out = pdf.drop(columns=drop_cols) if drop_cols else pdf.copy()
             out["label_idx"] = idx.astype("int32")
             out["pred_label"] = label_arr[idx]
@@ -447,150 +479,35 @@ def score_candidates(cand: DataFrame, cfg: PipelineConfig | None = None,
     return cand.mapInPandas(run, schema=out_schema)
 
 
-def enum_score_filter_number(
-    docs: DataFrame, cfg: PipelineConfig | None = None,
-    doc_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """The FULLY-FUSED flagship path for lengths-only scoring backends
-    (r7): candidate enumeration + scoring + NonRel filter + per-doc
-    R-numbering in ONE Arrow-batched mapInPandas pass over the documents
-    — no intermediate candidate frame crosses the Python boundary at
-    all. Valid only when the resolved backend declares
-    ``needs = "lengths"`` (asserted); text backends keep the two-stage
-    pipeline (candidates -> score_filter_number) unchanged.
-
-    The enumeration is candidates_lengths_kernel's loop verbatim (same
-    kept-set and cap semantics); docs are whole within each input row,
-    so numbering needs no cross-batch carry: rows are filtered, sorted
-    by (sent_diff, i1, i2) per doc, and numbered exactly like
-    score_filter_number's _emit. Output is byte-identical to
-    score_filter_number(candidates(docs, emit="lengths")) — pinned in
-    tests/test_round7_perf.py and by the q_triples oracle."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.util import ensure_parallelism
-
-    cfg = cfg or PipelineConfig()
-    factory = _resolve_factory(cfg)
-    if getattr(factory, "needs", "text") != "lengths":
-        raise ValueError(
-            "enum_score_filter_number requires a lengths-only scoring "
-            f"backend; {cfg.scorer!r} consumes text — use "
-            "score_filter_number(candidates(docs), cfg)"
-        )
-    labels = list(cfg.labels)
-    label_arr = np.asarray(labels, dtype=object)
-    non_rel = cfg.non_rel
-    src = ensure_parallelism(
-        docs.select(F.col(doc_col).alias("doc_id"), F.col(text_col)),
-        factor=1,
+def _number(doc: pd.DataFrame, non_rel: str) -> pd.DataFrame | None:
+    """Vectorized NonRel filter + per-doc R-numbering of a scored frame
+    of COMPLETE docs: sort by (doc, sent_diff, i1, i2), rel index via
+    groupby cumcount — one Arrow batch out per batch in, never per doc."""
+    doc = doc[doc["pred_label"] != non_rel]
+    if len(doc) == 0:
+        return None
+    doc = doc.sort_values(
+        ["doc_id", "sent_diff", "i1", "i2"], kind="mergesort"
+    ).reset_index(drop=True)
+    rn = doc.groupby("doc_id", sort=False).cumcount() + 1
+    return pd.DataFrame(
+        {
+            "doc_id": doc["doc_id"],
+            "rel_n": rn.astype("int32"),
+            "pred": doc["pred_label"],
+            "subj_id": doc["ent_id_1"],
+            "obj_id": doc["ent_id_2"],
+            "score": doc["score"],
+            "sent_diff": doc["sent_diff"].astype("int32"),
+            "i1": doc["i1"].astype("int32"),
+            "i2": doc["i2"].astype("int32"),
+        }
     )
-    id_type = src.schema["doc_id"].dataType.simpleString()
-    vocab = dict(cfg.ent_vocab)
-    arg1_types = set(t1 for t1, _ in cfg.valid_combs)
-    arg2_types = set(t2 for _, t2 in cfg.valid_combs)
-    allowed: dict[str, set] = {}
-    for t1, t2 in cfg.valid_combs:
-        allowed.setdefault(t1, set()).add(t2)
-    sl = cfg.sent_len
-    cutoff = cfg.cutoff
-    cap = cfg.max_pairs_per_doc or 0
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer = factory(cfg, labels)
-        for pdf_in in batches:
-            rows: list = []
-            for did, tx in zip(pdf_in["doc_id"], pdf_in[text_col]):
-                if tx is None:
-                    continue
-                toks = tx.split(" ")
-                ntok = len(toks)
-                men = [
-                    (i + 1, vocab[t], (i // sl))
-                    for i, t in enumerate(toks)
-                    if t in vocab
-                ]
-                m1s = [m for m in men if m[1] in arg1_types]
-                if not m1s:
-                    continue
-                m2s = [m for m in men if m[1] in arg2_types]
-                if not m2s:
-                    continue
-                n_sent = max((ntok + sl - 1) // sl, 1)
-                dbw = [
-                    [d for d in m2s if abs(d[2] - s) <= cutoff]
-                    for s in range(n_sent)
-                ]
-                pairs = []
-                done = False
-                for i1, t1, s1 in m1s:
-                    al = allowed.get(t1)
-                    for i2, t2, s2 in dbw[s1]:
-                        if i1 != i2 and al is not None and t2 in al:
-                            pairs.append((i1, t1, s1, i2, t2, s2))
-                            if cap and len(pairs) >= cap:
-                                done = True
-                                break
-                    if done:
-                        break
-                if not pairs:
-                    continue
-                pre = [0] * (ntok + 1)
-                for k, t in enumerate(toks):
-                    pre[k + 1] = pre[k] + len(t)
-                for i1, t1, s1, i2, t2, s2 in pairs:
-                    lo, hi = (s1, s2) if s1 <= s2 else (s2, s1)
-                    wst = lo * sl + 1
-                    wen = min(ntok, (hi + 1) * sl)
-                    wl = pre[wen] - pre[wst - 1] + (wen - wst) + 10
-                    rows.append(
-                        (did, f"T{i1}", f"T{i2}", t1, t2, wl, wl,
-                         abs(s1 - s2), i1, i2)
-                    )
-            if not rows:
-                continue
-            # the scorer sees the SAME columns a lengths-mode candidate
-            # frame carries (register_scorer contract fidelity)
-            pdf = pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "ent_id_1", "ent_id_2", "ent_type_1",
-                    "ent_type_2", "s1_len", "s2_len", "sent_diff",
-                    "i1", "i2",
-                ],
-            )
-            idx, score = scorer(pdf)
-            pdf["pred_label"] = label_arr[idx]
-            pdf["score"] = score
-            pdf = pdf[pdf["pred_label"] != non_rel]
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(
-                ["doc_id", "sent_diff", "i1", "i2"], kind="mergesort"
-            ).reset_index(drop=True)
-            rn = pdf.groupby("doc_id", sort=False).cumcount() + 1
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "rel_n": rn.astype("int32"),
-                    "pred": pdf["pred_label"],
-                    "subj_id": pdf["ent_id_1"],
-                    "obj_id": pdf["ent_id_2"],
-                    "score": pdf["score"],
-                    "sent_diff": pdf["sent_diff"].astype("int32"),
-                    "i1": pdf["i1"].astype("int32"),
-                    "i2": pdf["i2"].astype("int32"),
-                }
-            )
 
-    out = src.mapInPandas(
-        run,
-        schema=(
-            f"doc_id {id_type}, rel_n int, pred string, subj_id string, "
-            "obj_id string, score double, sent_diff int, i1 int, i2 int"
-        ),
-    )
+def _with_rel_id(out: DataFrame) -> DataFrame:
+    # build the R-id string JVM-side: millions of Python string objects
+    # otherwise dominate the UDF at low core counts
     return out.select(
         "doc_id",
         F.concat(F.lit("R"), F.col("rel_n")).alias("rel_id"),
@@ -598,9 +515,77 @@ def enum_score_filter_number(
     )
 
 
+TRIPLE_SCHEMA = (
+    "rel_n int, pred string, subj_id string, obj_id string, score double, "
+    "sent_diff int, i1 int, i2 int"
+)
+
+
+def enum_score_filter_number(
+    docs: DataFrame, cfg: PipelineConfig | None = None,
+    doc_col: str = "doc_id", text_col: str = "text",
+) -> DataFrame:
+    """The FULLY-FUSED flagship path, for every scoring backend: candidate
+    enumeration + scoring + NonRel filter + per-doc R-numbering in ONE
+    Arrow-batched mapInPandas pass over the documents — document text
+    goes in, triples come out, and no candidate frame crosses the Python
+    boundary at all.
+
+    Per Arrow batch of documents the kernel enumerates the capped pairs
+    with ``candidates.candidate_rows`` (the shared enumeration core) in
+    the emit the backend declares: window lengths for lengths-only
+    backends (the stub), the ``[s1]``/``[s2]``-marked window strings for
+    text backends (mlp, npt, hf, and registered ones by default). The
+    scorer sees the SAME columns that emit's candidate frame carries (the
+    register_scorer contract), in slices of at most ``cfg.batch_size``
+    rows. Docs are whole within each input row, so numbering needs no
+    cross-batch carry: rows are filtered, sorted by (sent_diff, i1, i2)
+    per doc, and numbered exactly like score_filter_number. Output equals
+    score_filter_number(candidates(docs)) — pinned for stub, mlp and npt
+    in tests/test_round7_perf.py and by the q_triples oracle."""
+    from ..functions.util import ensure_parallelism
+    from .candidates import CANDIDATE_COLS, candidate_rows, enum_spec
+
+    cfg = cfg or PipelineConfig()
+    factory = _resolve_factory(cfg)
+    emit = _needs(factory)
+    rows = cfg.batch_size
+    labels = list(cfg.labels)
+    label_arr = np.asarray(labels, dtype=object)
+    non_rel = cfg.non_rel
+    src = ensure_parallelism(
+        docs.select(F.col(doc_col).alias("doc_id"),
+                    F.col(text_col).alias("text")),
+        factor=1,
+    )
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    spec = enum_spec(cfg)
+    cols = CANDIDATE_COLS[emit]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        scorer = factory(cfg, labels)
+        for pdf_in in batches:
+            cand = list(
+                candidate_rows(pdf_in["doc_id"], pdf_in["text"], spec, emit)
+            )
+            if not cand:
+                continue
+            pdf = pd.DataFrame(cand, columns=cols)
+            idx, score = _score_batched(scorer, pdf, rows)
+            pdf["pred_label"] = label_arr[idx]
+            pdf["score"] = score
+            out = _number(pdf, non_rel)
+            if out is not None:
+                yield out
+
+    return _with_rel_id(
+        src.mapInPandas(run, schema=f"doc_id {id_type}, {TRIPLE_SCHEMA}")
+    )
+
+
 def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """FUSED scoring + NonRel filter + per-doc R-numbering in ONE
-    ``mapInPandas`` pass with ZERO shuffle.
+    ``mapInPandas`` pass with ZERO shuffle, over a candidate frame.
 
     Correctness requires each document's candidate rows to be contiguous
     within one partition — guaranteed by the narrow candidate-generation
@@ -615,47 +600,10 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
     label_arr = np.asarray(labels, dtype=object)
     non_rel = cfg.non_rel
     factory = _resolve_factory(cfg)
+    rows = cfg.batch_size
     cand = _scorer_input(cand, factory)
     drop_cols = [c for c in SCORER_INPUT_COLS if c in cand.columns]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", cand.schema["doc_id"].dataType),
-            T.StructField("rel_n", T.IntegerType()),
-            T.StructField("pred", T.StringType()),
-            T.StructField("subj_id", T.StringType()),
-            T.StructField("obj_id", T.StringType()),
-            T.StructField("score", T.DoubleType()),
-            T.StructField("sent_diff", T.IntegerType()),
-            T.StructField("i1", T.IntegerType()),
-            T.StructField("i2", T.IntegerType()),
-        ]
-    )
-
-    def _emit(doc: pd.DataFrame) -> pd.DataFrame | None:
-        """Vectorized filter + per-doc numbering for a frame of COMPLETE
-        docs: sort by (doc, sent_diff, i1, i2), rel index via groupby
-        cumcount — one Arrow batch out per batch in, never per doc."""
-        doc = doc[doc["pred_label"] != non_rel]
-        if len(doc) == 0:
-            return None
-        doc = doc.sort_values(
-            ["doc_id", "sent_diff", "i1", "i2"], kind="mergesort"
-        ).reset_index(drop=True)
-        rn = doc.groupby("doc_id", sort=False).cumcount() + 1
-        return pd.DataFrame(
-            {
-                "doc_id": doc["doc_id"],
-                "rel_n": rn.astype("int32"),
-                "pred": doc["pred_label"],
-                "subj_id": doc["ent_id_1"],
-                "obj_id": doc["ent_id_2"],
-                "score": doc["score"],
-                "sent_diff": doc["sent_diff"].astype("int32"),
-                "i1": doc["i1"].astype("int32"),
-                "i2": doc["i2"].astype("int32"),
-            }
-        )
+    id_type = cand.schema["doc_id"].dataType.simpleString()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         scorer = factory(cfg, labels)
@@ -663,7 +611,7 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            idx, score = scorer(pdf)
+            idx, score = _score_batched(scorer, pdf, rows)
             pdf = pdf.drop(columns=drop_cols)
             pdf["pred_label"] = label_arr[idx]
             pdf["score"] = score
@@ -676,19 +624,14 @@ def score_filter_number(cand: DataFrame, cfg: PipelineConfig | None = None) -> D
             carry = pdf[boundary]
             done = pdf[~boundary]
             if len(done):
-                out = _emit(done)
+                out = _number(done, non_rel)
                 if out is not None:
                     yield out
         if carry is not None and len(carry):
-            out = _emit(carry)
+            out = _number(carry, non_rel)
             if out is not None:
                 yield out
 
-    out = cand.mapInPandas(run, schema=out_schema)
-    # build the R-id string JVM-side: millions of Python string objects
-    # otherwise dominate the UDF at low core counts
-    return out.select(
-        "doc_id",
-        F.concat(F.lit("R"), F.col("rel_n")).alias("rel_id"),
-        "pred", "subj_id", "obj_id", "score", "sent_diff", "i1", "i2",
+    return _with_rel_id(
+        cand.mapInPandas(run, schema=f"doc_id {id_type}, {TRIPLE_SCHEMA}")
     )

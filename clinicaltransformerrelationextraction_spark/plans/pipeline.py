@@ -6,16 +6,18 @@ pages →(U1 segment)→ mentions →(J1+F3+F4 candidate gen)→ marked pairs
 triples.
 
 Physical shape at scale (the plan we WANT, verified in tests/explain):
-- candidate generation is a narrow per-row stage (zero shuffle);
-- scoring is a narrow Arrow-batched map;
-- the only shuffle is the final per-doc window over already-filtered triples;
+- the whole flagship is ONE narrow Arrow kernel over the documents
+  (``enum_score_filter_number``): pair enumeration, marking, scoring,
+  NonRel filter and numbering per document, for every scoring backend —
+  zero shuffle beyond the input split;
 - optional salted repartition before scoring equalizes per-task load when
-  host domains skew document sizes (north rule).
+  host domains skew document sizes (north rule); salted runs and streams
+  score a candidate frame instead (``candidates`` + the scoring kernels).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,15 +25,40 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..operators.candidates import candidates
 from ..operators.postprocess import brat_render, link_triples, triples
-from ..operators.scoring import score_candidates
+from ..operators.scoring import (
+    enum_score_filter_number, score_candidates, score_filter_number,
+)
 from ..operators.segmentation import mentions
 
 
-@dataclass
 class PipelineResult:
-    candidates: DataFrame
-    scored: DataFrame
-    triples: DataFrame
+    """One run's ``triples``, with its candidate frame and the scored
+    candidates as lazy views, built on first access: the fused flagship
+    never reads them, and planning the HOF candidate frame costs ~0.5 s
+    of driver time per call (measured at local[4])."""
+
+    def __init__(self, docs: DataFrame, cfg: PipelineConfig, doc_col: str,
+                 salt: bool) -> None:
+        self._docs, self._cfg, self._doc_col, self._salt = (
+            docs, cfg, doc_col, salt)
+        self.triples: DataFrame | None = None
+
+    @cached_property
+    def candidates(self) -> DataFrame:
+        cand = candidates(self._docs, self._cfg, doc_col=self._doc_col)
+        if not self._salt:
+            return cand
+        # Salted repartition before the expensive scoring stage: spreads a
+        # hot host-domain's candidates across cfg.salt_buckets tasks.
+        # Keyed by doc hash -> documents stay whole within a partition.
+        return cand.repartition(
+            F.pmod(F.hash(F.col("doc_id"), F.lit("salt")),
+                   F.lit(self._cfg.salt_buckets))
+        )
+
+    @cached_property
+    def scored(self) -> DataFrame:
+        return score_candidates(self.candidates, self._cfg)
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,47 +93,25 @@ def run_pipeline(
     cfg: PipelineConfig | None = None,
     doc_col: str = "doc_id",
     salt: bool = False,
-    fused: bool = True,
 ) -> PipelineResult:
-    """fused=True (default): scoring + NonRel filter + per-doc numbering in
-    one mapInPandas pass — the whole pipeline is then ZERO-shuffle (docs
-    stay partition-contiguous through the narrow candidate stage). Salting
-    repartitions by doc hash (keeps docs whole, so fused numbering stays
-    correct) and forces the non-fused path OFF only if you repartition by a
-    non-doc key yourself."""
-    from ..operators.scoring import score_filter_number, scoring_emit
-
+    """Unsalted batch input: triples come from the single-kernel flagship
+    (``enum_score_filter_number``) — enumeration, marking, scoring, NonRel
+    filter and per-doc numbering in one mapInPandas over the documents,
+    for lengths-only and text backends alike. Streams score the candidate
+    frame with the fused ``score_filter_number``. Salting repartitions the
+    candidate frame by doc hash before scoring and numbers with the
+    windowed ``triples``."""
     cfg = cfg or PipelineConfig()
-    cand = candidates(docs, cfg, doc_col=doc_col)
+    res = PipelineResult(docs, cfg, doc_col, salt)
     if salt:
-        # Salted repartition before the expensive scoring stage: spreads a
-        # hot host-domain's candidates across cfg.salt_buckets tasks.
-        # Keyed by doc hash -> documents stay whole within a partition.
-        cand = cand.repartition(
-            F.pmod(
-                F.hash(F.col("doc_id"), F.lit("salt")), F.lit(cfg.salt_buckets)
-            )
-        )
-    scored = score_candidates(cand, cfg)
-    if fused and not salt:
-        # lengths-only backends (the stub): the FULLY-fused single-kernel
-        # path — enumeration + scoring + filter + numbering in one
-        # mapInPandas over the documents, nothing crossing the Python
-        # boundary in between (r7; res.candidates keeps the full text
-        # contract, lazily). Text backends keep the two-stage pipeline.
-        if scoring_emit(cfg) == "lengths" and not docs.isStreaming:
-            from ..operators.scoring import enum_score_filter_number
-
-            trip = enum_score_filter_number(
-                docs, cfg, doc_col=doc_col
-            )
-        else:
-            trip = score_filter_number(cand, cfg)
-    else:
         # salted input interleaves docs within a partition (hash order), so
         # use the windowed form, which is order-independent
-        trip = triples(scored, cfg)
-    return PipelineResult(candidates=cand, scored=scored, triples=trip)
+        res.triples = triples(res.scored, cfg)
+    elif docs.isStreaming:
+        res.triples = score_filter_number(res.candidates, cfg)
+    else:
+        res.triples = enum_score_filter_number(docs, cfg, doc_col=doc_col)
+    return res
 
 
 def run_linked(docs: DataFrame, cfg: PipelineConfig | None = None,

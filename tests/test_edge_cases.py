@@ -79,3 +79,33 @@ def test_doc_exceeding_pair_cap(spark):
     stats = candidate_cap_stats(docs, cfg).first()
     assert stats.n_docs_capped == 1
     assert stats.n_pairs_dropped == stats.n_pairs_total - 10
+
+
+def test_cap_stats_hand_count(spark):
+    """candidate_cap_stats counts uncapped pairs without enumerating them.
+    Hand count for ``"join spark" * 40``: 80 tokens, 8 sentences of 10,
+    5 ADE (join) and 5 Drug (spark) per sentence; each ADE pairs with the
+    Drugs of its own and adjacent sentences — 10 at the two edge
+    sentences, 15 elsewhere: 2*5*10 + 6*5*15 = 550. With a (Drug, Drug)
+    combo, ``"spark x hash spark"`` pairs each of its 3 Drugs with the
+    other 2 but never with itself: 6."""
+    from clinicaltransformerrelationextraction_spark.operators.candidates import (
+        candidate_cap_stats,
+    )
+
+    docs = _docs(spark, [
+        (1, " ".join(["join", "spark"] * 40), "en"),
+        (2, None, "en"),
+        (3, "spark", "en"),
+    ])
+    st = candidate_cap_stats(docs, PipelineConfig(max_pairs_per_doc=100)).first()
+    assert (st.n_docs, st.n_pairs_total, st.n_docs_capped,
+            st.n_pairs_dropped) == (3, 550, 1, 450)
+    dd = PipelineConfig(valid_combs=[("Drug", "Drug")], max_pairs_per_doc=4)
+    st = candidate_cap_stats(
+        _docs(spark, [(1, "spark x hash spark", "en")]), dd
+    ).first()
+    assert (st.n_pairs_total, st.n_docs_capped, st.n_pairs_dropped) == (6, 1, 2)
+    assert candidates(_docs(spark, [(1, "spark x hash spark", "en")]),
+                      PipelineConfig(valid_combs=[("Drug", "Drug")])
+                      ).count() == 6

@@ -362,3 +362,17 @@ def test_pq_adc_broadcasts_tables_keeps_window_group_limit(spark):
     assert nodes.count("BroadcastHashJoin") >= 4, nodes
     assert "SortMergeJoin" not in nodes
     assert nodes.count("WindowGroupLimit") == 4
+
+
+def test_text_scorer_pipeline_is_one_arrow_kernel(spark):
+    """A text backend's flagship runs as the single fused kernel: exactly
+    one MapInPandas, no Generate (the HOF enumeration's explode) and at
+    most the input-split Exchange — it cannot silently fall back to the
+    candidate-frame form."""
+    trip = run_pipeline(
+        load_documents(spark, SF_SMOKE), PipelineConfig(scorer="mlp")
+    ).triples
+    nodes = _nodes(_plan(trip))
+    assert nodes.count("MapInPandas") == 1, nodes
+    assert "Generate" not in nodes, nodes
+    assert nodes.count("Exchange") <= 1, nodes

@@ -8,6 +8,9 @@ byte-identical to the formulation it replaced.
   strings the text mode builds;
 - cosine_with_norms == cosine (bit-identical doubles);
 - the stub scorer's lengths input path == its text input path;
+- the fused flagship kernel == scoring the HOF text candidate frame, for
+  lengths-only and text backends, and the frames it hands a scorer ==
+  that candidate frame;
 - q_ann_ivf_topk's aggregate-based corpus cell assignment == the
   window-based one (same argmax + tiebreak).
 """
@@ -248,28 +251,197 @@ def test_ngram_rows_kernel_matches_explode_hof(spark, edge_docs):
     _same(ngram_rows(edge, 2, ["lang"]), hof, "edge bigrams")
 
 
-def test_fused_enum_score_matches_two_stage(spark):
-    """enum_score_filter_number (the r7 single-kernel flagship path) must
-    equal score_filter_number over the lengths candidate frame, incl.
-    the R-numbering, on default and capped configs."""
-    from clinicaltransformerrelationextraction_spark.operators.candidates import (
-        candidates_lengths_kernel,
-    )
-    from clinicaltransformerrelationextraction_spark.operators.scoring import (
-        enum_score_filter_number, score_filter_number,
-    )
+# edge docs of the fused kernel's input domain; doc 6 has exactly 7
+# pairs (one ADE x 7 Drugs), so it sits exactly at the cap=7 boundary
+FUSED_EDGE_DOCS = [
+    (1, None),                                        # NULL text
+    (2, ""),                                          # empty text
+    (3, "   "),                                       # whitespace only
+    (4, "héllo join wörld spark 日本語 key ünï hash"),  # multi-byte tokens
+    (5, "spark"),                                     # a single mention
+    (6, "join " + " ".join(["spark"] * 7)),           # exactly at cap=7
+    (7, "join  spark   key"),                         # empty tokens
+    (8, "x join x x x x x x x x spark key x x x x x x x x x x x table"),
+    (9, " join spark "),                              # edge empty tokens
+]
+FUSED_CFGS = ({}, {"max_pairs_per_doc": 7}, {"data_format_mode": 1})
+
+
+def _fused_inputs(spark):
+    """The corpus (and its first 30 docs) with the edge docs appended
+    under ids past the corpus's, the edge docs alone under int and string
+    ids, and an empty input."""
     from clinicaltransformerrelationextraction_spark.plans.pipeline import (
         load_documents,
     )
 
-    docs = load_documents(spark, SF_SMOKE)
-    for kw in ({}, {"max_pairs_per_doc": 7}, {"data_format_mode": 1}):
-        cfg = PipelineConfig(**kw)
+    smoke = load_documents(spark, SF_SMOKE).select("doc_id", "text")
+    edge = spark.createDataFrame(FUSED_EDGE_DOCS, "doc_id int, text string")
+    tail = edge.select(
+        (F.col("doc_id").cast("long") + 10**6).alias("doc_id"), "text")
+    return {
+        "smoke": smoke.unionByName(tail),
+        "smoke30": smoke.filter(F.col("doc_id") < 30).unionByName(tail),
+        "edge_int": edge,
+        "edge_string": edge.select(
+            F.concat(F.lit("d"), "doc_id").alias("doc_id"), "text"
+        ),
+        "empty": edge.limit(0),
+    }
+
+
+def test_fused_enum_score_matches_two_stage(spark):
+    """enum_score_filter_number (the single-kernel flagship path) must
+    equal score_filter_number over the HOF text candidate frame
+    (candidates_indexed, the independent oracle), incl. the R-numbering,
+    for lengths-only (stub) and text (npt, mlp) backends at the default
+    cap, cap=7 and uni mode, over corpus + edge docs (int and string ids
+    and an empty input at the default config): stub and npt exactly, mlp with
+    identical keys and labels and scores within 1e-12 (float matmuls
+    over differently sized batches)."""
+    from clinicaltransformerrelationextraction_spark.operators.candidates import (
+        candidates_indexed,
+    )
+    from clinicaltransformerrelationextraction_spark.operators.scoring import (
+        enum_score_filter_number, score_filter_number,
+    )
+
+    inputs = _fused_inputs(spark)
+    key = ["doc_id", "rel_id", "pred", "subj_id", "obj_id", "sent_diff",
+           "i1", "i2"]
+    for scorer in ("stub", "npt", "mlp"):
+        corpus = "smoke" if scorer == "stub" else "smoke30"
+        cases = [(corpus, kw) for kw in FUSED_CFGS] + [
+            ("edge_int", {}), ("edge_string", {}), ("empty", {})]
+        for name, kw in cases:
+            docs = inputs[name]
+            cfg = PipelineConfig(scorer=scorer, **kw)
+            got = enum_score_filter_number(docs, cfg)
+            want = score_filter_number(candidates_indexed(docs, cfg), cfg)
+            msg = f"fused {scorer} {name} {kw}"
+            g = sorted(map(tuple, got.select(*key, "score").collect()))
+            w = sorted(map(tuple, want.select(*key, "score").collect()))
+            assert name == "empty" or g, msg
+            if scorer != "mlp":
+                assert g == w, msg
+                continue
+            assert [r[:-1] for r in g] == [r[:-1] for r in w], msg
+            assert all(abs(a[-1] - b[-1]) <= 1e-12
+                       for a, b in zip(g, w)), msg
+
+
+@pytest.fixture
+def unregister_recording():
+    from clinicaltransformerrelationextraction_spark.operators.scoring import (
+        SCORER_REGISTRY,
+    )
+
+    yield
+    SCORER_REGISTRY.pop("recording", None)
+
+
+def _recording_factory(out_dir):
+    """A scorer that pickles every frame it is handed into ``out_dir`` and
+    labels every pair with label index 1 (never NonRel)."""
+    def factory(cfg, labels):
+        import os
+        import uuid
+
+        import numpy as np
+
+        def scorer(pdf):
+            pdf.to_pickle(os.path.join(out_dir, f"{uuid.uuid4().hex}.pkl"))
+            return (np.ones(len(pdf), dtype=np.int64),
+                    np.full(len(pdf), 0.5))
+
+        return scorer
+
+    return factory
+
+
+def _recorded(out_dir):
+    import glob
+
+    import pandas as pd
+
+    return [pd.read_pickle(f) for f in glob.glob(f"{out_dir}/*.pkl")]
+
+
+def test_fused_text_kernel_hands_scorer_the_candidate_frame(
+        spark, tmp_path, unregister_recording):
+    """The text emit must hand a registered text backend exactly the rows
+    candidates_indexed builds: the same columns, in order, and the same
+    marked strings, over the corpus and every edge doc."""
+    from clinicaltransformerrelationextraction_spark.operators.candidates import (
+        candidates_indexed,
+    )
+    from clinicaltransformerrelationextraction_spark.operators.scoring import (
+        enum_score_filter_number, register_scorer,
+    )
+
+    inputs = _fused_inputs(spark)
+    for name in ("smoke", "edge_int", "edge_string", "empty"):
+        for kw in ({}, {"max_pairs_per_doc": 7}):
+            out = tmp_path / f"{name}{len(kw)}"
+            out.mkdir()
+            register_scorer("recording", _recording_factory(str(out)))
+            cfg = PipelineConfig(scorer="recording", **kw)
+            docs = inputs[name]
+            n = enum_score_filter_number(docs, cfg).count()
+            want = candidates_indexed(docs, cfg)
+            frames = _recorded(out)
+            assert all(list(f.columns) == want.columns for f in frames)
+            got = sorted(tuple(r) for f in frames
+                         for r in f.itertuples(index=False))
+            assert got == sorted(map(tuple, want.collect())), (name, kw)
+            assert n == len(got)
+
+
+def test_fused_batch_size_slices_scorer_calls(
+        spark, tmp_path, unregister_recording):
+    """PipelineConfig.batch_size bounds the rows of every scorer call in
+    the fused kernel, and slicing changes no triple (stub and npt)."""
+    from clinicaltransformerrelationextraction_spark.operators.scoring import (
+        enum_score_filter_number, register_scorer,
+    )
+
+    docs = _fused_inputs(spark)["smoke30"]
+    for scorer in ("stub", "npt"):
         _same(
-            enum_score_filter_number(docs, cfg),
-            score_filter_number(candidates_lengths_kernel(docs, cfg), cfg),
-            f"fused enum+score {kw}",
+            enum_score_filter_number(
+                docs, PipelineConfig(scorer=scorer, batch_size=7)),
+            enum_score_filter_number(docs, PipelineConfig(scorer=scorer)),
+            f"batch_size=7 {scorer}",
         )
+    register_scorer("recording", _recording_factory(str(tmp_path)))
+    n = enum_score_filter_number(
+        docs, PipelineConfig(scorer="recording", batch_size=7)).count()
+    sizes = [len(f) for f in _recorded(tmp_path)]
+    assert sum(sizes) == n and max(sizes) == 7
+    with pytest.raises(ValueError, match="batch_size"):
+        enum_score_filter_number(docs, PipelineConfig(batch_size=0))
+
+
+def test_text_scoring_rejects_lengths_frame_on_driver(spark):
+    """keep_text=True, or a text backend, given a lengths-only candidate
+    frame fails at plan build with a clear ValueError — not as a KeyError
+    inside a Python worker."""
+    from clinicaltransformerrelationextraction_spark.operators.scoring import (
+        score_candidates, score_filter_number,
+    )
+
+    docs = spark.createDataFrame(FUSED_EDGE_DOCS, "doc_id int, text string")
+    lens = candidates(docs, PipelineConfig(), emit="lengths")
+    with pytest.raises(ValueError, match="keep_text"):
+        score_candidates(lens, PipelineConfig(), keep_text=True)
+    for scorer in ("mlp", "npt"):
+        cfg = PipelineConfig(scorer=scorer)
+        with pytest.raises(ValueError, match="s1_marked"):
+            score_candidates(lens, cfg)
+        with pytest.raises(ValueError, match="s1_marked"):
+            score_filter_number(lens, cfg)
+    # the lengths-only stub still scores a lengths frame
+    assert score_candidates(lens, PipelineConfig()).count() == lens.count()
 
 
 def test_pagerank_symmetric_path_matches_general(spark):
